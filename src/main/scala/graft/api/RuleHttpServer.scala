@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** The reference's HTTP product surface, runnable: `POST /rules/evaluate`
@@ -53,8 +55,17 @@ final class RuleHttpServer(spark: SparkSession, port: Int = 0) {
   // a small pool, not the dispatcher thread: SparkSession is thread-safe
   // (each evaluate builds an independent local DataFrame plan), so two
   // rules in flight must not serialize behind each other — spec-pinned by
-  // RuleHttpServerSpec's concurrent-request test
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+  // RuleHttpServerSpec's concurrent-request test. Workers are named
+  // rule-http-<n> so thread dumps point at the serving layer.
+  private val pool = {
+    val base = Executors.defaultThreadFactory()
+    val workers = new AtomicInteger()
+    Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = base.newThread(r)
+      t.setName(s"rule-http-${workers.incrementAndGet()}")
+      t
+    })
+  }
   server.setExecutor(pool)
 
   private def respond(exchange: HttpExchange, status: Int, json: String): Unit = {

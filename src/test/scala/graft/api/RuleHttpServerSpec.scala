@@ -4,6 +4,7 @@ import graft.SparkSpec
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.jdk.CollectionConverters._
 
 class RuleHttpServerSpec extends SparkSpec {
 
@@ -89,6 +90,20 @@ class RuleHttpServerSpec extends SparkSpec {
       assert(bad.body().contains("Error"))
       val noRule = post(port, s"""{"Users":$users}""")
       assert(noRule.statusCode() == 400 && noRule.body().contains("Rule is required"))
+    } finally srv.stop()
+  }
+
+  test("worker threads are named rule-http-<n>") {
+    val srv = new RuleHttpServer(spark)
+    val port = srv.start()
+    try {
+      val resp = post(port,
+        s"""{"Rule":{"Conditions":{"Conditions":[
+              {"Property":"CompanyCode","Operator":"Equal","Value":"C1"}]}},
+            "Users":$users}""")
+      assert(resp.statusCode() == 200)
+      val names = Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      assert(names.exists(_.matches("rule-http-[0-9]+")), names)
     } finally srv.stop()
   }
 }
