@@ -790,8 +790,8 @@ private[graft] object BatteryUtil {
     * FIXED 500-doc input (ids 0..499 — the whole corpus at sf0.01, so the
     * oracle is unchanged there); production ingest batches are
     * constant-size while history grows, so the row's input must be
-    * constant across SFs too (the q_cdc_incremental / StreamLoopProbe
-    * row-design lesson); history-growth scaling is StreamLoopProbe's job.
+    * constant across SFs too (the q_cdc_incremental row-design lesson);
+    * history-growth scaling is measured outside the battery.
     */
   private[graft] def runDocIngest(s: org.apache.spark.sql.SparkSession, dir: String,
                            compactAfterBatch1: Boolean)

@@ -179,15 +179,15 @@ private[graft] object MultimodalBattery {
 
     // INCREMENTAL storage dedup — the daily-ingest shape for the chunk
     // store: a FIXED 250-blob batch (doc_id in [250, 500) — constant at
-    // every SF, the StreamLoopProbe row-design lesson: inputs constant
+    // every SF, the streaming-loop row-design lesson: inputs constant
     // in production must be constant in the row) probes the persisted
     // (hash, length) index of everything else, which GROWS with the
     // corpus; every batch chunk is annotated hit (in history) / first
     // (new key's first occurrence — the chunk a store writes) / dup
     // (intra-batch repeat). History is scanned never shuffled (batch
     // keys broadcast into a left-semi probe — the
-    // incrementalHammingPairs plan; tools/CdcIncProbe measures the probe
-    // flat across 100× history). Oracle: re-derives the same labels from
+    // incrementalHammingPairs plan; the probe measured flat across 100×
+    // history). Oracle: re-derives the same labels from
     // the COMMITTED chunk fixture (ids 0..499 at sf0.01, so the split is
     // identical there) — the engine recomputes both sides' chunks, the
     // oracle only re-labels.

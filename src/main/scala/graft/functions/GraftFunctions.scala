@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** SQL-surface registration of the library's native expressions, so
@@ -62,6 +63,12 @@ object GraftFunctions {
     "bpe_token_count_bytes" -> composed(cs =>
       TextFunctions.bpeTokenCountBytes(cs(0))))
 
+  /** Every table-valued function, installed by both [[register]] and
+    * [[GraftExtensions]].
+    */
+  val tableFunctions: Map[String, Seq[Expression] => LogicalPlan] =
+    graft.plans.EvaluateRuleTvf.all ++ graft.plans.GraftTvfs.all
+
   // IDEMPOTENT per session: callers sprinkle register() defensively (every
   // SQL-surface query path), and createOrReplaceTempFunction logs a
   // "replaced a previously registered function" warning on each repeat —
@@ -76,8 +83,9 @@ object GraftFunctions {
       all.foreach { case (name, builder) =>
         ColumnBridge.registerFunction(spark, name, builder)
       }
-      graft.plans.EvaluateRuleTvf.register(spark)
-      graft.plans.GraftTvfs.register(spark)
+      tableFunctions.foreach { case (name, builder) =>
+        ColumnBridge.registerTableFunction(spark, name, builder)
+      }
     }
 }
 
@@ -94,7 +102,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
           "graft.functions", name),
         builder))
     }
-    graft.plans.EvaluateRuleTvf.all.foreach { case (name, builder) =>
+    GraftFunctions.tableFunctions.foreach { case (name, builder) =>
       ext.injectTableFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

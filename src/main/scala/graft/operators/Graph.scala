@@ -184,12 +184,12 @@ object Graph {
     * The oriented edge table feeds THREE consumers (both wedge legs and
     * the closing semi-join) and the degree table two; left lazy, Catalyst
     * duplicates each subtree per consumer and the edge normalization runs
-    * ~30 times (PlanAudit caught exactly that: 62 shuffles for what is
-    * three joins). So the shared tables PERSIST for the call and `f`'s
-    * result is MATERIALIZED (localCheckpoint — the [[pageRank]]
-    * discipline) before they are released: intermediates never leak past
-    * the call, and the caller gets a computed table whose lineage no
-    * longer references them.
+    * ~30 times (its plan had 62 shuffles for what is three joins). So
+    * the shared tables PERSIST for the call and `f`'s result is
+    * MATERIALIZED (localCheckpoint — the [[pageRank]] discipline) before
+    * they are released: intermediates never leak past the call, and the
+    * caller gets a computed table whose lineage no longer references
+    * them.
     */
   private def withTriangles(edges: DataFrame, srcCol: String,
                             dstCol: String)(
@@ -201,10 +201,10 @@ object Graph {
       .groupBy("n").agg(count(lit(1)).as("d"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // rank = (degree, id); orient u -> v iff rank(u) < rank(v).
-    // SHUFFLE_HASH on the degree side (round-20, guide §3.1 — found via
-    // the plan-capture hook below: these two joins were the remaining
-    // SortMergeJoins of the operator, each SORTING the m-row canonical
-    // edge table inside the `oriented` cache build): deg is node-sized,
+    // SHUFFLE_HASH on the degree side (round-20, guide §3.1 — these two
+    // joins were the remaining SortMergeJoins of the operator, each
+    // SORTING the m-row canonical edge table inside the `oriented` cache
+    // build, as the pre-checkpoint plan showed): deg is node-sized,
     // so hashing it streams the edges unsorted — the same deliberate
     // small-side hash join as the wedge legs. Skew note (ADVICE r19):
     // the build side is the DEGREE table (one row per node), so a hub
@@ -245,24 +245,8 @@ object Graph {
         oriented.select(col("u").as("v"), col("v").as("w")).hint("shuffle_hash"),
         Seq("v", "w"), "left_semi")
       .select("x", "v", "w")
-    val resultLazy = f(tri, deg.select(col("n").as("node"),
-      col("d").as("degree")))
-    // plan-capture hook (round-20, dev-only): the RETURNED frame is a
-    // localCheckpoint — an RDD scan whose explain proves nothing about
-    // the wedge machinery (the r19 plan dumps were vacuous for exactly
-    // this reason). With -Dgraft.plan.capture.dir set, the PRE-checkpoint
-    // plan (the wedge self-join + closing semi-join this operator exists
-    // to shape) is written there; unset in production and the bench.
-    sys.props.get("graft.plan.capture.dir").foreach { d =>
-      val p = java.nio.file.Paths.get(d,
-        s"withTriangles_${System.nanoTime()}.txt")
-      java.nio.file.Files.write(p, resultLazy.queryExecution
-        .explainString(org.apache.spark.sql.execution
-          .ExplainMode.fromString("formatted"))
-        .getBytes("UTF-8"))
-      ()
-    }
-    val result = resultLazy.localCheckpoint()
+    val result = f(tri, deg.select(col("n").as("node"),
+      col("d").as("degree"))).localCheckpoint()
     oriented.unpersist()
     deg.unpersist()
     und.unpersist()

@@ -19,8 +19,8 @@ package graft.operators
   * Consistency with the measured sweeps: at n = 2,000 / threshold 0.45
   * this yields (planes 3, tables 10) — the battery's hand tuning is
   * (3, 8); at n = 20,000 it yields (planes 6, tables ≤ 64 capped) —
-  * ScaleTen's plane sweep measured (6, 32) as the recall-recovering
-  * point. The model is deliberately conservative on tables (it assumes
+  * a plane sweep on the 10× corpus measured (6, 32) as the
+  * recall-recovering point. The model is deliberately conservative on tables (it assumes
   * the threshold-angle worst case; real near-dup pairs are closer), so
   * `maxTables` caps the candidate-side cost.
   */

@@ -1219,7 +1219,7 @@ object Profile {
                        k: Int): DataFrame = {
     // the slice-sketch subtree feeds EIGHT consumers (slice list, both
     // pair-union legs, both membership joins); cache the ≤ N·k-row table
-    // so the corpus scan runs once (PlanAudit: unchecked, it ran 8×).
+    // so the corpus scan runs once (unchecked, its plan ran it 8×).
     // persist, not localCheckpoint: N slices is not driver-bounded (so no
     // asLocal), but cache-managed blocks are reclaimed by clearCache/LRU
     // instead of leaking per call until the ContextCleaner notices.

@@ -27,13 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EvaluateRuleTvf {
 
-  private def stringLit(e: Expression, what: String): String = e match {
+  private[plans] def stringLit(e: Expression, what: String): String = e match {
     case Literal(s: UTF8String, StringType) => s.toString
     case other => throw new IllegalArgumentException(
       s"$what must be a string literal, got $other")
   }
 
-  private def activeSession: SparkSession =
+  private[plans] def activeSession: SparkSession =
     SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
 
@@ -71,7 +71,7 @@ object EvaluateRuleTvf {
     "evaluate_rule" -> evaluateRule,
     "evaluate_rules" -> evaluateRules)
 
-  private def plan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
+  private[plans] def plan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.queryExecution.logical
 
   /** Session-local runtime registration (pair of `GraftFunctions.register`). */

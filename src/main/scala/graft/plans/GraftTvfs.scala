@@ -1,13 +1,10 @@
 package graft.plans
 
 import graft.operators.{Dedup, Profile, TextStats}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.IntegerType
 
 /** The EXTENSION-TIER pipeline operators as table-valued functions — the
   * [[EvaluateRuleTvf]] machinery pointed at the LLM-data-pipeline
@@ -29,22 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * because it IS the same plan.
   */
 object GraftTvfs {
-
-  private def stringLit(e: Expression, what: String): String = e match {
-    case Literal(s: UTF8String, StringType) => s.toString
-    case other => throw new IllegalArgumentException(
-      s"$what must be a string literal, got $other")
-  }
+  import EvaluateRuleTvf.{activeSession, plan, stringLit}
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(i: Int, IntegerType) => i
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
   }
-
-  private def activeSession: SparkSession =
-    SparkSession.getActiveSession.getOrElse(
-      throw new IllegalStateException("no active SparkSession"))
 
   /** `graft_drift(tableA, tableB, categoryCol)` →
     * [[Profile.categoricalDrift]] of the two named tables over the named
@@ -283,15 +271,4 @@ object GraftTvfs {
     "graft_asof" -> graftAsof,
     "graft_sessionize" -> graftSessionize,
     "graft_drift_embed" -> graftDriftEmbed)
-
-  private def plan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
-    df.queryExecution.logical
-
-  /** Session-local runtime registration (invoked by
-    * `GraftFunctions.register` alongside [[EvaluateRuleTvf]]).
-    */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      ColumnBridge.registerTableFunction(spark, name, builder)
-    }
 }

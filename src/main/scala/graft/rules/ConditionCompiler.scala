@@ -49,22 +49,18 @@ object ConditionCompiler {
       if (numericOps(op) && dt == StringType) (raw.try_cast(LiftType), LiftType) else (raw, dt)
 
     // A JSON-null value resolves to the external parameter keyed by the
-    // property name (IQueryableRuleEvaluator.cs:238-241, 313-329).
-    def value: RuleValue = c.value match {
+    // property name (IQueryableRuleEvaluator.cs:238-241, 313-329); None
+    // when no parameter key matches.
+    lazy val resolved: Option[RuleValue] = c.value match {
       case RuleValue.Null =>
         params.collectFirst { case (k, v) if k.equalsIgnoreCase(c.property) => anyToValue(v) }
-          .getOrElse(throw new IllegalArgumentException(
-            s"External parameter '${c.property}' was not supplied."))
-      case v => v
+      case v => Some(v)
     }
+    def value: RuleValue = resolved.getOrElse(throw new IllegalArgumentException(
+      s"External parameter '${c.property}' was not supplied."))
     // Like `value`, but a JSON null with no matching param stays null
     // (the Dynamic* family tests the resolved constant itself).
-    def valueOrNull: RuleValue = c.value match {
-      case RuleValue.Null =>
-        params.collectFirst { case (k, v) if k.equalsIgnoreCase(c.property) => anyToValue(v) }
-          .getOrElse(RuleValue.Null)
-      case v => v
-    }
+    def valueOrNull: RuleValue = resolved.getOrElse(RuleValue.Null)
     def lhsLit: Column = coerceLit(value, lhsType)
 
     op match {

@@ -129,7 +129,7 @@ object EmbeddingStreams {
     // ~10 exchanges + ~8 broadcast builds per micro-batch — at batch
     // scale each AQE stage materialization is its own Spark job, and the
     // loop's quiet-host cost was pure job-launch overhead (33 stage-jobs
-    // per batch measured by graft.tools.JobCount). This inlined plan
+    // per batch, measured by a per-call-site job count). This inlined plan
     // computes the SAME drop sets (EmbeddingStreamsSpec + the
     // q_embed_ingest_stream golden mirror pin them) with exactly TWO
     // exchanges per batch: the exact-dup collapse and the candidate

@@ -3,11 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** TWO-decade headroom probe (VERDICT r10 #8): derives an sf10 corpus
+/** TWO-decade headroom input (VERDICT r10 #8): derives an sf10 corpus
   * (100× sf0.1) for the three families with the steepest 10× ratios —
-  * events as-of, pair-family dedup, PageRank — and measures whether each
-  * family's sf1→sf10 ratio holds the envelope its sf0.1→sf1 ratio
-  * predicted. Only the tables those families read are derived (documents,
+  * events as-of, pair-family dedup, PageRank — so `graft.Bench` with
+  * `SPARK_GRAFT_SF_DIR` pointed at it can check whether each family's
+  * sf1→sf10 ratio holds the envelope its sf0.1→sf1 ratio predicted.
+  * Only the tables those families read are derived (documents,
   * embeddings, events, orders, lineitem); the rule-engine dims stay at
   * their fixed universe by design (see [[ScaleTen.derive]]).
   *
@@ -138,76 +139,6 @@ object ScaleHundred {
 
     ScaleTen.derive(spark, sf01, sf1)
     derive(spark, sf1, sf10)
-
-    // Bench's measurement discipline: noop sink, cache cleared + GC'd
-    // between runs so memoized indices/persists don't cross-bill.
-    def time(name: String, dir: String): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      Thread.sleep(100)
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // the probe set: each steep family's battery representative. The
-    // FIXED-tuning LSH row is deliberately absent — its 10× sweep row
-    // already measured the quadratic blowup the tuned twin avoids; sf10
-    // is exactly where only the density-scaled path is meaningful.
-    // q_audio_neardup is also absent: javax.sound decode is serial per
-    // JVM (documented in SCALE.md), so its single-JVM sf10 point would
-    // measure the JDK lock, not the plan.
-    val all = Seq(
-      "q_asof_join", "q_asof_nearest", "q_events_session",   // event time
-      "q_dedup_minhash", "q_fingerprint_winnow",             // pair dedup
-      "q_embed_neardup_tuned",                               // tuned LSH
-      "q_image_neardup",                                     // media Hamming
-      "q_image_neardup_guarded",                             // guarded certificate (r13)
-      "q_sem_contaminate_lsh",                               // semantic LSH decontam (r13)
-      "q_hybrid_rrf",                                        // RRF fusion
-      "q_dedup_clusters",                                    // CC fixpoint
-      "q_pagerank",                                          // iterative
-      // r13 serving tier (third-decade points, VERDICT r13 #6)
-      "q_ann_int8", "q_ann_ivfpq",                           // quantized ANN offline
-      "q_ann_ivf_stream", "q_ann_ivfpq_stream",              // streamed index maintenance
-      "q_ann_refit",                                         // refit-decision report
-      "q_drift", "q_drift_numeric", "q_drift_by_lang",       // drift monitors
-      "q_cms", "q_retrieval_eval",                           // sketch + eval
-      // r14 additions
-      "q_cdc_chunks", "q_storage_dedup", "q_cdc_incremental", // CDC storage dedup
-      "q_qsketch_rank", "q_qsketch_quantiles",               // quantile sketch
-      "q_kmv_distinct", "q_kmv_overlap", "q_kmv_matrix",     // KMV set-ops sketch
-      "q_cms_stream", "q_kmv_stream", "q_kmv_novelty",       // streamed sketch loops
-      "q_dup_mass", "q_cluster_sizes",                       // dedup governance
-      "q_triangles", "q_degree_dist", "q_clustering")        // graph metrics
-    // SPARK_GRAFT_PROBE_ONLY=a,b filters the probe set (the sweep-filter
-    // convention of ScaleFull) so a new family's third-decade point
-    // doesn't re-measure the whole table
-    val names = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-      .map(f => all.filter(f)).getOrElse(all)
-
-    // SPARK_GRAFT_SWEEP_WARM_PER_SF=1: ScaleFull's canonical protocol —
-    // an untimed run AT each SF first, so one-time builds (k-means fits,
-    // BM25 postings, memoized signature tables) land in the warm-up and
-    // the timed run measures the steady-state cost production pays
-    val warmPerSf = sys.env.get("SPARK_GRAFT_SWEEP_WARM_PER_SF").contains("1")
-    def timed(n: String, dir: String): Double = {
-      if (warmPerSf) try time(n, dir) catch { case _: Throwable => () }
-      time(n, dir)
-    }
-
-    names.foreach(n => time(n, "/root/testdata/sf0.01")) // warm codegen/JIT
-
-    println("\n| query | sf0.1 | sf1 | sf10 | r(0.1→1) | r(1→10) |")
-    println("|---|---|---|---|---|---|")
-    names.foreach { n =>
-      val t01 = timed(n, sf01)
-      val t1 = timed(n, sf1)
-      val t10 = timed(n, sf10)
-      println(f"| $n | $t01%.2f s | $t1%.2f s | $t10%.2f s | ${t1 / t01}%.1f× | ${t10 / t1}%.1f× |")
-    }
     spark.stop()
   }
 }

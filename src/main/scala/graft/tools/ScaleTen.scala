@@ -1,11 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** One-decade-further scaling evidence: derives a 10× corpus ("sf1") from
-  * the sf0.1 test tables and times the five most expensive battery
-  * pipelines on both, printing the markdown for SCALE.md.
+/** One-decade-further scaling input: derives a 10× corpus ("sf1") from
+  * the sf0.1 test tables. `graft.Bench` with `SPARK_GRAFT_SF_DIR` pointed
+  * at the output times the battery rows on it.
   *
   * The derivation keeps the WORKLOAD SHAPE neutral rather than the exact
   * statistics:
@@ -155,76 +155,6 @@ object ScaleTen {
     spark.sparkContext.setLogLevel("ERROR")
 
     derive(spark, sf01, out)
-    // third arg "derive-only": stop after the corpus lands — the mode
-    // battery-level sf1 anchors use (the battery rows re-run through
-    // graft.Bench with SPARK_GRAFT_SF_DIR pointed here; the sweep below
-    // is the per-family decade protocol, not the battery one)
-    if (args.lift(2).contains("derive-only")) { spark.stop(); return }
-
-    val names = Seq("q_curation_pipeline", "q_curation_decontam",
-      "q_dedup_clusters", "q_repetition", "q_embed_neardup_lsh",
-      // round-8 additions: span dedup (positional grams + per-doc windows),
-      // quality model (md5 feature hashing), BM25 (scan-stage term filter),
-      // Bloom-pushdown decontamination
-      "q_span_dedup", "q_quality_model", "q_bm25", "q_decontam_bloom",
-      // round-8 second wave: bigram LM (largest gram join), vocab-id
-      // encoding (broadcast join + per-doc rebuild), span-removal curation
-      // suffix, iterative PageRank, per-key interval islands, full-outer
-      // snapshot diff
-      "q_perplexity", "q_vocab_encode", "q_curation_spans", "q_pagerank",
-      "q_merge_intervals", "q_snapshot_diff")
-
-    // noop sink, not count(): count() lets Catalyst ELIMINATE work that
-    // doesn't affect cardinality (q_quality_model's final left join has a
-    // unique right key, so count() skipped the entire scoring pipeline);
-    // the noop write forces every column of every row
-    def time(name: String, dir: String): (Double, Long) = {
-      // construction INSIDE the timer: operators that materialize during
-      // construction (PageRank's final count, the CDC merges' writes)
-      // would otherwise run off the clock and report bogus ~0.1 s rows
-      val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      df.write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      (sec, df.count())
-    }
-
-    // warm the JVM (codegen, classloading) on the small corpus so the
-    // sf0.1 column measures data work, not first-query compilation
-    names.foreach(n => time(n, "/root/testdata/sf0.01"))
-
-    println("\n| query | sf0.1 | sf1 (10x) | time ratio | sf1 rows |")
-    println("|---|---|---|---|---|")
-    names.foreach { n =>
-      val (t01, _) = time(n, sf01)
-      val (t1, rows1) = time(n, out)
-      println(f"| $n | $t01%.2f s | $t1%.2f s | ${t1 / t01}%.1f× | $rows1 |")
-    }
-
-    // LSH density response: at 10× corpus density the FIXED battery
-    // tuning (planes=3) lets within-bucket candidate pairs grow ~100×;
-    // the documented response is +log2(growth) planes. Measure both.
-    def embedLsh(dir: String, planes: Int, tables: Int): (Double, Long) = {
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val t0 = System.nanoTime()
-      val rows = graft.operators.Dedup.embeddingPairsLsh(
-        emb, "vec_id", "embedding", threshold = 0.45,
-        planes = planes, tables = tables).count()
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-    println("\n| embeddingPairsLsh @ sf1 | planes | tables | time | pairs found |")
-    println("|---|---|---|---|---|")
-    for ((p, t) <- Seq((3, 8), (4, 8), (4, 16), (5, 16), (5, 32), (6, 32))) {
-      val (sec, pairs) = embedLsh(out, p, t)
-      println(f"| sf1 | $p | $t | $sec%.2f s | $pairs |")
-    }
-    // the model-derived tuning (LshTuning.forCorpus) against the same
-    // corpus — the auto-tuned point should land on the sweep's efficient
-    // frontier without hand-searching
-    val n1 = spark.read.parquet(s"$out/embeddings.parquet").count()
-    val auto = graft.operators.LshTuning.forCorpus(n1, threshold = 0.45)
-    val (autoSec, autoPairs) = embedLsh(out, auto.planes, auto.tables)
-    println(f"| sf1 AUTO (LshTuning) | ${auto.planes} | ${auto.tables} | $autoSec%.2f s | $autoPairs |")
     spark.stop()
   }
 }

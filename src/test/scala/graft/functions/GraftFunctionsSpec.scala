@@ -61,6 +61,15 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(ByteLevel.decode(toks.mkString("")) == "the cat said naïve 🎉")
   }
 
+  test("GraftExtensions injects every table-valued function register installs") {
+    val injected = org.apache.spark.sql.graft.Extensions
+      .tableFunctionNames(new GraftExtensions)
+    val expected = (graft.plans.EvaluateRuleTvf.all ++ graft.plans.GraftTvfs.all).keySet
+    assert(expected.size == 14)
+    assert(expected.diff(injected).isEmpty,
+      s"missing from GraftExtensions: ${expected.diff(injected)}")
+  }
+
   test("rolling fingerprints overlap for shared substrings, disjoint otherwise") {
     val df = Seq(
       ("x", "the quick brown fox jumps over the lazy dog in the morning light"),

@@ -9,7 +9,7 @@ class LshTuningSpec extends AnyFunSuite {
     val small = LshTuning.forCorpus(2000, threshold = 0.45)
     assert(small.planes == 3)
     assert(small.tables >= 8 && small.tables <= 16)
-    // 10x corpus: ScaleTen's plane sweep measured planes 6 as the
+    // 10x corpus: a plane sweep measured planes 6 as the
     // recall-recovering point (with 32 tables)
     val big = LshTuning.forCorpus(20000, threshold = 0.45)
     assert(big.planes >= 6 && big.planes <= 7)
