@@ -19,11 +19,14 @@ import org.apache.spark.sql.catalyst.graftbridge.LocalJson
   * Rows are inferred and parsed on the driver with Spark's own JSON inferrer
   * and parser ([[LocalJson]]) into a `LocalRelation`, and replies are written
   * with Spark's own generator: the schema, rows and reply bytes are those of
-  * `spark.read.json` and `toJSON`. A filter rule then runs with no Spark job
-  * (Catalyst folds its Filter into the `LocalRelation` on the driver), and a
-  * rule that fails validation fails before any job; a group-by rule still
-  * runs its aggregate as Spark jobs. There is no payload-size threshold back
-  * to `spark.read.json`: it read the payload as ONE string row, parsed by one
+  * `spark.read.json` and `toJSON`. Every request then runs on the calling
+  * thread with no Spark job and no generated code: [[LocalJson.write]] folds
+  * a filter rule's Filter and a group-by rule's aggregate into rows on the
+  * driver, interpreted, and a rule that fails validation fails before any
+  * plan runs. Only a plan that does not fold (an unevaluable or
+  * non-deterministic expression, which no rule compiles to) falls back to
+  * Spark's executed plan. There is no payload-size threshold back to
+  * `spark.read.json`: it read the payload as ONE string row, parsed by one
   * task, so it never spread a large payload either.
   *
   * This entry point targets request-sized payloads (the reference literally

@@ -80,11 +80,13 @@ object DocumentStreams {
     * discovery fail once the loop adds its first partitioned batch) —
     * seed through this helper.
     */
-  def seedIndex(rows: DataFrame, path: String): Unit =
+  def seedIndex(rows: DataFrame, path: String): Unit = {
     rows.withColumn("__batch_id", lit(-1L))
       .hint("rebalance")
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch_id").parquet(path)
+    historySchemaMemo.remove(path)
+  }
 
   /** Re-runnable per-batch sink write: the batch's rows land in their own
     * `__batch_id=N` partition via DYNAMIC partition overwrite, so a
@@ -200,6 +202,7 @@ object DocumentStreams {
       }
     }
     fs.delete(tmp, true)
+    historySchemaMemo.remove(path)
   }
 
   /** Materialize a batch-sized frame ONCE and cut its lineage (round-19,
@@ -234,6 +237,22 @@ object DocumentStreams {
     ()
   }
 
+  /** Per-path schema memo for [[readHistory]] (round-20, guide §6
+    * listing/planning cost): a loop-owned path's schema is FIXED for the
+    * loop's life (every batch writes the same columns), but a bare
+    * `spark.read.parquet` re-infers it from file footers on EVERY
+    * micro-batch — per-batch driver work that grows with the file count.
+    * The first read of a path infers once and caches; later batches hand
+    * the cached schema to `read.schema(...)`, skipping inference
+    * entirely. [[seedIndex]] and [[compactIndex]] evict the path's entry,
+    * so a path re-seeded with other columns is inferred again, and a
+    * schema without `__batch_id` (a legacy flat seed) is never cached, so
+    * it cannot switch off the in-flight-batch exclusion once the path
+    * becomes partitioned.
+    */
+  private val historySchemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+
   /** Read a loop-owned path as HISTORY for batch `batchId`: every
     * committed partition EXCEPT the in-flight batch's own. The exclusion
     * is what makes retries safe — a failed attempt may have already
@@ -243,19 +262,6 @@ object DocumentStreams {
     * Partition pruning makes the filter free. A pre-partitioning seed
     * without the column (legacy flat layout) is read as-is.
     */
-  /** Per-path schema memo for [[readHistory]] (round-20, guide §6
-    * listing/planning cost): a loop-owned path's schema is FIXED for the
-    * loop's life (every batch writes the same columns), but a bare
-    * `spark.read.parquet` re-infers it from file footers on EVERY
-    * micro-batch — per-batch driver work that grows with the file count.
-    * The first read of a path infers once and caches; later batches hand
-    * the cached schema to `read.schema(...)`, skipping inference
-    * entirely. Keyed by path; paths are loop-owned temp dirs, so a stale
-    * entry cannot alias a different layout.
-    */
-  private val historySchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
   private[streaming] def readHistory(spark: org.apache.spark.sql.SparkSession,
                           path: String, batchId: Long): DataFrame = {
     val cached = historySchemaMemo.get(path)
@@ -263,7 +269,7 @@ object DocumentStreams {
       if (cached != null) spark.read.schema(cached).parquet(path)
       else {
         val inferred = spark.read.parquet(path)
-        historySchemaMemo.put(path, inferred.schema)
+        if (inferred.columns.contains("__batch_id")) historySchemaMemo.put(path, inferred.schema)
         inferred
       }
     if (h.columns.contains("__batch_id")) h.filter(col("__batch_id") =!= batchId)

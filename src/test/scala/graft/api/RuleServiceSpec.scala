@@ -5,6 +5,7 @@ import graft.SparkSpec
 import graft.model.RuleJson
 import graft.rules.{RuleEvaluator, RuleSetExecutor}
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.graftbridge.LocalJson
@@ -239,6 +240,64 @@ class RuleServiceSpec extends SparkSpec {
     }
   }
 
+  // group-by edge cases: CompanyCode is null in one row and missing from
+  // another, Title is missing from one row, and RegNo is null in every row
+  // of group C2
+  private val groupRows =
+    """[{"Id":"u1","CompanyCode":"C1","RegNo":"5","Title":"A"},
+        {"Id":"u2","CompanyCode":null,"RegNo":"7","Title":"A"},
+        {"Id":"u3","RegNo":"3","Title":"B"},
+        {"Id":"u4","CompanyCode":"C2","RegNo":null,"Title":"B"},
+        {"Id":"u5","CompanyCode":"C2","RegNo":null}]"""
+
+  private def groupRule(fn: String, groupBy: String, noMatch: Boolean = false): String = {
+    val conditions =
+      if (noMatch) """"Conditions":{"Conditions":[{"Property":"Id","Operator":"Equal","Value":"none"}]},"""
+      else ""
+    val prop = if (fn == "Count") "Id" else "RegNo"
+    s"""{"Name":"edge",$conditions"GroupBy":$groupBy,""" +
+      s""""Aggregation":{"AggregateProperty":"$prop","AggregateFunction":"$fn"}}"""
+  }
+
+  /** (case, rule, the exact reply where the reference fixes it) */
+  private val groupEdgeCases = Seq(
+    ("Count, no GroupBy, no matching row", groupRule("Count", "[]", noMatch = true),
+      Some("""[{"count":0}]""")),
+    ("Min, no GroupBy, no matching row", groupRule("Min", "[]", noMatch = true), Some("[]")),
+    ("Max, no GroupBy, no matching row", groupRule("Max", "[]", noMatch = true), Some("[]")),
+    ("Count by a key, no matching row", groupRule("Count", """["CompanyCode"]""", noMatch = true),
+      Some("[]")),
+    ("Count by null and missing keys", groupRule("Count", """["CompanyCode"]"""), None),
+    ("Min by a missing key", groupRule("Min", """["Title"]"""), None),
+    ("Min, aggregate property null in a whole group", groupRule("Min", """["CompanyCode"]"""), None),
+    ("Max, aggregate property null in a whole group", groupRule("Max", """["CompanyCode"]"""), None),
+    ("Max by two keys", groupRule("Max", """["CompanyCode","Title"]"""), None),
+  )
+
+  test("group-by edge cases equal the spark.read.json + toJSON path as row multisets") {
+    for ((what, rule, exact) <- groupEdgeCases) {
+      val got = RuleService.evaluateToJson(spark, groupRows, rule)
+      assert(rowMultiset(got) == rowMultiset(sparkReply(groupRows, rule)), what)
+      exact.foreach(e => assert(got == e, what))
+    }
+  }
+
+  test("LocalJson.write over a plan that does not fold equals toJSON byte for byte") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_localjson").toString + "/t"
+    Seq((1L, "a", Some(2.5), Seq(1, 2)), (2L, null, None, Seq.empty[Int]),
+        (3L, "c\"q\u00e9", Some(-0.0), null))
+      .toDF("id", "s", "d", "arr")
+      .withColumn("o", org.apache.spark.sql.functions.struct($"id", $"s"))
+      .coalesce(1).write.parquet(dir)
+    val scan = spark.read.parquet(dir)
+    for (df <- Seq(scan, scan.where($"id" > 1).select($"o", $"arr", ($"id" * 2).as("x")),
+                   scan.where($"id" > 9))) {
+      assert(LocalJson.write(df) == df.toJSON.collect().mkString("[", ",", "]"))
+    }
+    // the file scan runs as Spark jobs: this is the executed-plan branch
+    assert(jobsDuring(LocalJson.write(scan)) > 0)
+  }
+
   test("evaluateAll equals the spark.read.json path as a row multiset") {
     val rng = new Random(5)
     val rows = usersJson(rng, 120)
@@ -271,11 +330,14 @@ class RuleServiceSpec extends SparkSpec {
     jobs.get
   }
 
-  test("no Spark job for filter or invalid rules; at most 2 for group-by rules") {
-    for ((shape, rows, rule) <- requests(seed = 29, n = 40)) {
+  test("no Spark job for any request shape: filter, group-by or invalid") {
+    val edges = groupEdgeCases.map { case (what, rule, _) => (what, groupRows, rule) }
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    for ((shape, rows, rule) <- requests(seed = 29, n = 40) ++ edges) {
       val jobs = jobsDuring(Try(RuleService.evaluateToJson(spark, rows, rule)))
-      if (shape == "aggregate") assert(jobs <= 2, rule)
-      else assert(jobs == 0, s"$shape: $rule")
+      assert(jobs == 0, s"$shape: $rule")
     }
+    // each request's rule is evaluated interpreted: no class is compiled
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
   }
 }

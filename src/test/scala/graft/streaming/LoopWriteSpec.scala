@@ -88,4 +88,28 @@ class LoopWriteSpec extends SparkSpec {
     val excl = DocumentStreams.readHistory(spark, p, 1L)
     assert(excl.select("id").as[Long].collect().toSeq === Seq(1L))
   }
+
+  test("readHistory sees the new columns after a path is re-seeded in the same JVM") {
+    val p = tmp() + "/reseed"
+    DocumentStreams.seedIndex(Seq((1L, "s")).toDF("id", "sig"), p)
+    assert(DocumentStreams.readHistory(spark, p, 0L).columns.toSet ===
+      Set("id", "sig", "__batch_id"))
+    DocumentStreams.seedIndex(Seq((2L, 3, 4L)).toDF("id", "band", "bh"), p)
+    val h = DocumentStreams.readHistory(spark, p, 0L)
+    assert(h.columns.toSet === Set("id", "band", "bh", "__batch_id"))
+    assert(h.select("id", "band", "bh").as[(Long, Int, Long)].collect().toSeq ===
+      Seq((2L, 3, 4L)))
+  }
+
+  test("a legacy flat seed's schema is not memoized: the partitioned " +
+      "layout that replaces it is read with its own columns") {
+    val p = tmp() + "/flat"
+    Seq((1L, "a")).toDF("id", "t").write.parquet(p)
+    assert(DocumentStreams.readHistory(spark, p, 0L).count() === 1L)
+    // the path becomes loop-owned, with another column set; batch 0 is in flight
+    Seq((1L, 5, -1L), (2L, 6, 0L)).toDF("id", "band", "__batch_id")
+      .write.mode("overwrite").partitionBy("__batch_id").parquet(p)
+    assert(DocumentStreams.readHistory(spark, p, 0L).select("id", "band")
+      .as[(Long, Int)].collect().toSeq === Seq((1L, 5)))
+  }
 }
